@@ -16,7 +16,7 @@ import org.apache.spark.storage.ShuffleDataBlockId
   * streams early don't leak connections.
   */
 private[cloud] class CloudBlockStream(env: CloudShuffleEnv,
-    dataBlock: ShuffleDataBlockId, start: Long, end: Long)
+    val dataBlock: ShuffleDataBlockId, val start: Long, val end: Long)
     extends InputStream with Logging {
 
   private var in: FSDataInputStream = _

@@ -50,11 +50,10 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   // calls before the FS client's own buffering (io.file.buffer.size /
   // the object-store client's multipart block store) — 1 MiB keeps that
   // protection while an 8 MiB array per concurrent map writer was pure
-  // heap churn (tools/Ts01Profile: ~10% of ts01's plugin-lane wall on the
-  // write side). Object-store PUT granularity lives in the FS client, not
+  // heap churn (profiled on ts01 in r14: ~10% of its plugin-lane wall on
+  // the write side). Object-store PUT granularity lives in the FS client, not
   // here; raise per job if a store's client measures otherwise.
   val writeBufferSize: Int = conf.getSizeAsBytes(WRITE_BUFFER_KEY, "1m").toInt
-  val readBufferSize: Int = conf.getSizeAsBytes(READ_BUFFER_KEY, "1m").toInt
   val maxBufferSizeTask: Long = conf.getSizeAsBytes(MAX_BUFFER_TASK_KEY, "128m")
   val maxConcurrencyTask: Int = math.max(1, conf.getInt(MAX_CONCURRENCY_KEY, 10))
   /** Executor-wide cap on concurrent prefetch reads across ALL tasks
@@ -84,8 +83,6 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   /** Observable permit count (-1 when the cap is off) — diagnostics. */
   def availableFetchPermits: Int =
     executorFetchPermits.map(_.availablePermits()).getOrElse(-1)
-  val prefetchEnabled: Boolean = conf.getBoolean(PREFETCH_KEY, defaultValue = true)
-  val adaptiveConcurrency: Boolean = conf.getBoolean(ADAPTIVE_KEY, defaultValue = true)
   /** Per-task read-side statistics (bytes, wait/prefetch time, MiB/s) at
     * INFO on task completion — reference `S3BufferedPrefetchIterator.scala:
     * 155-186`. Off by default: zero timing calls on the consumer path. */
@@ -233,11 +230,8 @@ object CloudShuffleEnv extends Logging {
   val ROOT_DIR_KEY = "spark.shuffle.cloud.rootDir"
   val PREFIXES_KEY = "spark.shuffle.cloud.folderPrefixes"
   val WRITE_BUFFER_KEY = "spark.shuffle.cloud.writeBufferSize"
-  val READ_BUFFER_KEY = "spark.shuffle.cloud.readBufferSize"
   val MAX_BUFFER_TASK_KEY = "spark.shuffle.cloud.maxBufferSizeTask"
   val MAX_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyTask"
-  val PREFETCH_KEY = "spark.shuffle.cloud.prefetch"
-  val ADAPTIVE_KEY = "spark.shuffle.cloud.adaptiveConcurrency"
   val CLEANUP_KEY = "spark.shuffle.cloud.cleanup"
   val RELOCATE_KEY = "spark.shuffle.cloud.relocateMapStatus"
   val VALIDATE_KEY = "spark.shuffle.cloud.checksum.validate"

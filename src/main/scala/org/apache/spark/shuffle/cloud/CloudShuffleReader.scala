@@ -1,6 +1,6 @@
 package org.apache.spark.shuffle.cloud
 
-import java.io.{BufferedInputStream, InputStream}
+import java.io.InputStream
 
 import org.apache.spark.{InterruptibleIterator, SparkEnv, TaskContext}
 import org.apache.spark.internal.{config => SparkConfig}
@@ -143,11 +143,7 @@ private[cloud] class CloudShuffleReader[K, C](
         }
       }.toIndexedSeq
 
-    val fetched: Iterator[(BlockId, InputStream)] =
-      if (env.prefetchEnabled) new CloudPrefetchIterator(env, ranged)
-      else ranged.iterator.map { case (id, _, s) =>
-        (id, new BufferedInputStream(s, env.readBufferSize))
-      }
+    val fetched = new CloudPrefetchIterator(env, ranged, readMetrics)
 
     val serializerInstance = dep.serializer.newInstance()
     val recordIter = fetched.flatMap { case (blockId, in) =>

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shuffle round-trip suite — same shapes as the reference's own tests
   * (`S3ShuffleManagerTest.scala`): aggregation, group-by, forced sort
   * shuffle, combineByKey, terasort-like global sort — plus SQL through the
-  * plugin and checksum/prefetch toggles. `file://` substitutes for S3 via
+  * plugin, checksum toggles and prefetcher shutdown. `file://` substitutes for S3 via
   * the Hadoop FileSystem abstraction, exactly as the reference tests do.
   */
 class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
@@ -107,6 +107,24 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
     } finally {
       ctx.getConfiguration.getRootLogger.removeAppender("graft-stats-capture")
       ctx.updateLoggers()
+    }
+  }
+
+  test("an abandoned read (take) stops its prefetch workers") {
+    // a tiny budget parks most workers on memory and queues blocks with a
+    // live store tail; take(1) then abandons the read iterator. The task's
+    // completion must wake and end every worker, not leave them parked.
+    def prefetchThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("cloud-shuffle-prefetch-")).toSet
+    val before = prefetchThreads()
+    withSc(baseConf(CloudShuffleEnv.MAX_BUFFER_TASK_KEY -> "1k").setMaster("local[2]")) { sc =>
+      val firsts = sc.parallelize(1 to 100000, 8).map(i => (i, "x" * 20))
+        .repartition(2).mapPartitions(_.take(1)).collect()
+      assert(firsts.length == 2)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while ((prefetchThreads() -- before).nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      val leaked = prefetchThreads() -- before
+      assert(leaked.isEmpty, leaked.map(t => s"${t.getName} ${t.getState}").mkString(", "))
     }
   }
 
